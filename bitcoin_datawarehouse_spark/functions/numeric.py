@@ -96,9 +96,9 @@ def micro6(col: Column) -> Column:
     decimal-accumulation surface — while running in pure long
     arithmetic (measured ~2× the per-row aggregate throughput of the
     decimal sum on a 26M-row scoring join).  Only valid for columns
-    produced by ``ROUND(·, 6)``; overflow bound: |col| ≤ 9.2e12 per
-    row and Σ|k_i·w_i| ≤ 2⁶³ per group, far beyond any log-domain
-    score."""
+    produced by ``ROUND(·, 6)``; exactness bound: |col| ≲ 4.3e9 (2³²,
+    where ulp(col) is still below 10⁻⁶) per row, and overflow bound
+    Σ|k_i·w_i| ≤ 2⁶³ per group, far beyond any log-domain score."""
     return (col.cast(DEC) * F.lit(1_000_000)).cast("long")
 
 

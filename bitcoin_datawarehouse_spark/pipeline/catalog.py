@@ -21,6 +21,7 @@ agnostic so that swap is a storage-layer change only.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import time
@@ -28,6 +29,11 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: the footer key Spark writes its row schema under; Spark's own
+#: schema inference returns the schema stored there
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def hadoop_fs(spark: SparkSession, loc: str):
@@ -138,6 +144,67 @@ def scratch_root(prefix: str, sf_dir: str) -> str:
     )
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-listing rule: ``_``/``.`` names (``_SUCCESS``,
+    ``.crc`` checksums, ``_temporary``) are not table data."""
+    return name.startswith(("_", "."))
+
+
+def _data_files(root: Path) -> list[Path]:
+    """Every data file a Spark read of ``root`` scans, partition
+    directories included."""
+    out: list[Path] = []
+    with os.scandir(root) as it:
+        for e in it:
+            if _hidden(e.name):
+                continue
+            if e.is_dir():
+                out.extend(_data_files(Path(e.path)))
+            else:
+                out.append(Path(e.path))
+    return out
+
+
+def _footer_schema(session: SparkSession, path: Path) -> StructType | None:
+    """The schema Spark's inference would return for the flat table at
+    ``path``, read on the driver from ONE footer (as Spark does
+    without ``mergeSchema``) — or None when only Spark can answer:
+    ``mergeSchema`` is on, the root holds no top-level data files or
+    has subdirectories (partitioned roots), or the footer lacks
+    Spark's row-metadata key (files written by another tool)."""
+    merge = session.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if merge.lower() == "true":
+        return None
+    try:
+        with os.scandir(path) as it:
+            entries = [e for e in it if not _hidden(e.name)]
+    except OSError:
+        return None
+    files = sorted(e.path for e in entries if e.is_file())
+    if not files or len(files) != len(entries):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.read_metadata(files[0]).metadata or {}
+    except (OSError, pa.ArrowException):
+        return None
+    raw = meta.get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    return StructType.fromJson(json.loads(raw))
+
+
+def _read_parquet(session: SparkSession, path: Path) -> DataFrame:
+    """``session.read.parquet(path)``, with the schema passed in from
+    the footer when :func:`_footer_schema` has it: a supplied schema
+    skips Spark's one-task schema-inference job."""
+    schema = _footer_schema(session, path)
+    reader = session.read if schema is None else session.read.schema(schema)
+    return reader.parquet(str(path))
+
+
 class Warehouse:
     """Directory-backed catalog with ``schema.table`` addressing.
 
@@ -169,6 +236,17 @@ class Warehouse:
         """Existence probe (reference pg_loader.py:107-124)."""
         p = self.table_path(schema, table)
         return p.exists() and any(p.glob("*.parquet"))
+
+    def row_count(self, schema: str, table: str) -> int:
+        """Rows in ``schema.table`` summed from its Parquet footers on
+        the driver — the answer of ``COUNT(*)`` without a Spark job;
+        0 when the table directory is absent."""
+        import pyarrow.parquet as pq
+
+        p = self.table_path(schema, table)
+        if not p.exists():
+            return 0
+        return sum(pq.read_metadata(f).num_rows for f in _data_files(p))
 
     def table_exists_partitioned(self, schema: str, table: str) -> bool:
         """Existence probe for Hive-partitioned layouts: data files live
@@ -209,17 +287,18 @@ class Warehouse:
         file-skipping manifest sidecar, so only files whose min/max
         stats intersect every range are OPENED (identical rows, fewer
         files; the functions-level ``manifest_pruned_read`` wired into
-        the catalog read path, r8 VERDICT item 7)."""
+        the catalog read path, r8 VERDICT item 7).
+
+        The table schema comes from a Parquet footer read on the
+        driver (:func:`_read_parquet`), so building the frame launches
+        no Spark job; partitioned roots and non-Spark files fall back
+        to Spark's inference."""
         if ranges is None:
-            return self.spark.read.parquet(
-                str(self.table_path(schema, table))
-            )
+            return _read_parquet(self.spark, self.table_path(schema, table))
         if not use_manifest:
             from pyspark.sql import functions as F
 
-            df = self.spark.read.parquet(
-                str(self.table_path(schema, table))
-            )
+            df = _read_parquet(self.spark, self.table_path(schema, table))
             for c, (lo, hi) in ranges.items():
                 df = df.filter(
                     (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
@@ -238,7 +317,7 @@ class Warehouse:
         sessions share a context (r9 ADVICE: the old serve signatures
         took a dead ``spark`` parameter while reading on the MAIN
         session)."""
-        return session.read.parquet(str(self.table_path(schema, table)))
+        return _read_parquet(session, self.table_path(schema, table))
 
     def _manifest_sidecar(self, schema: str, table: str, cols) -> str:
         """Sidecar name for a table's file-stats manifest over a
@@ -356,7 +435,7 @@ class Warehouse:
 
     def read_version(self, schema: str, table: str, version_ms: int) -> DataFrame:
         p = self.root / schema / f"{table}.__v_{version_ms:015d}"
-        return self.spark.read.parquet(str(p))
+        return _read_parquet(self.spark, p)
 
     def rollback(self, schema: str, table: str) -> int:
         """Swap the newest snapshot back in as the live table (the

@@ -8,7 +8,8 @@ Reference parity (SURVEY.md §2.2): this is the Spark rebuild of
   (``:165-270``) → dropDuplicates + left-anti join + unionByName;
 * delete         — ``DELETE … WHERE`` (``:272-294``) → filter-rewrite;
 * MAX probe      — watermark read (``:296-318``);
-* COUNT probe    — post-load verification (``:320-339``).
+* COUNT probe    — post-load verification (``:320-339``) → row
+  counts summed from the Parquet footers, no Spark job.
 
 Merge semantics preserved exactly: new row wins on key conflict and
 ALL non-key columns are replaced (``pg_loader.py:246-259``).  Two
@@ -343,10 +344,13 @@ class Loader:
         return df.agg(F.max(column).alias("mx")).first()["mx"]
 
     def get_record_count(self) -> int:
-        """COUNT(*) probe (reference pg_loader.py:320-339); 0 when absent."""
+        """Row count of the target (reference COUNT(*) probe,
+        pg_loader.py:320-339); 0 when absent.  Summed from the
+        table's Parquet footers (:meth:`Warehouse.row_count`), so the
+        post-load verification launches no Spark job."""
         if not self.wh.table_exists(self.schema, self.table):
             return 0
-        return self.wh.read(self.schema, self.table).count()
+        return self.wh.row_count(self.schema, self.table)
 
 
 #: Hive's sentinel directory for NULL partition values

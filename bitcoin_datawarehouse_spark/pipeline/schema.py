@@ -21,6 +21,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
+
 #: the reference's fallback order, pg_loader.py:59-68
 _LATTICE = ["boolean", "long", "double", "timestamp", "string"]
 
@@ -80,11 +82,21 @@ def rows_to_df(
 ) -> DataFrame:
     """Materialize source rows as a typed DataFrame (reference
     ``dune_to_pg_worker.py:93 pd.DataFrame(data)``) with explicit
-    schema — no sampling inference."""
+    schema — no sampling inference.
+
+    The batch is built as ONE Arrow-backed local relation
+    (:func:`~bitcoin_datawarehouse_spark.functions.localframe.local_rows_df`),
+    not as ``defaultParallelism`` pickled slices: a merge's dedupe
+    stage would otherwise pay a Python-worker round trip per slice.
+    Values are coerced to the inferred type first (int→float in a
+    double column, bare date→midnight, non-string→``str``).  Naive
+    ``datetime`` values are read in the session time zone (Arrow's
+    reading), not the Python process's local zone; JSON sources
+    deliver no ``datetime`` values, so a sync is unaffected."""
     schema = infer_schema(rows)
     coerced = []
     for r in rows:
-        out = {}
+        out = []
         for f in schema.fields:
             v = r.get(f.name)
             if v is not None:
@@ -99,6 +111,6 @@ def rows_to_df(
                     v = dt.datetime(v.year, v.month, v.day)
                 elif isinstance(f.dataType, T.StringType) and not isinstance(v, str):
                     v = str(v)
-            out[f.name] = v
-        coerced.append(out)
-    return spark.createDataFrame(coerced, schema)
+            out.append(v)
+        coerced.append(tuple(out))
+    return local_rows_df(spark, coerced, schema)

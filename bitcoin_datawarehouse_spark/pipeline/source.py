@@ -15,11 +15,13 @@ RuntimeError on failure — ``dune_extractor.py:85-86,100-103``) against
 any callable transport, so the real HTTPS transport is one lambda away
 and tests inject a scripted one.
 
-All of this is driver-side by design — the *result* becomes a
-distributed DataFrame via ``rows_to_df``; the remote engine has
-already done the heavy filtering (the reference pushes the watermark
-parameter into the query, ``dune_extractor.py:57-59``), so rows
-arriving here are "the new batch", small relative to the warehouse.
+All of this is driver-side by design — the *result* becomes an
+Arrow-backed local DataFrame via ``rows_to_df`` (one LocalTableScan,
+no pickled Python slices; the merge's shuffle spreads it); the remote
+engine has already done the heavy filtering (the reference pushes the
+watermark parameter into the query, ``dune_extractor.py:57-59``), so
+rows arriving here are "the new batch", small relative to the
+warehouse.
 """
 
 from __future__ import annotations

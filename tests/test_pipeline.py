@@ -950,6 +950,199 @@ def test_rows_to_df_accepts_bare_dates(spark):
     assert row["d"] == _dt.datetime(2024, 1, 2)  # widened to midnight
 
 
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched) — counted through a
+    job group, so jobs of other threads do not count."""
+    sc = spark.sparkContext
+    group = f"count-{id(fn)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rows_to_df_matches_create_dataframe(spark):
+    """The Arrow-backed batch equals ``spark.createDataFrame`` over the
+    coerced rows: leading nulls, long→double widening, bools, bare
+    date→timestamp widening, the string fallback and an all-null
+    column keep the same schema and rows."""
+    raw = [
+        {"lead": None, "num": 1, "flag": True, "day": dt.date(2024, 1, 2),
+         "mixed": 7, "empty": None, "at": dt.datetime(2024, 1, 2, 3, 4, 5)},
+        {"lead": 5, "num": 2.5, "flag": None, "day": None,
+         "mixed": "x", "empty": None, "at": None},
+        {"lead": 6, "num": None, "flag": False,
+         "day": dt.datetime(2024, 3, 1, 12), "mixed": {"k": 1},
+         "empty": None, "at": dt.datetime(2024, 1, 2)},
+    ]
+    coerced = [
+        (None, 1.0, True, dt.datetime(2024, 1, 2), "7", None,
+         dt.datetime(2024, 1, 2, 3, 4, 5)),
+        (5, 2.5, None, None, "x", None, None),
+        (6, None, False, dt.datetime(2024, 3, 1, 12), "{'k': 1}", None,
+         dt.datetime(2024, 1, 2)),
+    ]
+    want = spark.createDataFrame(coerced, infer_schema(raw))
+    got = rows_to_df(spark, raw)
+    assert got.schema == want.schema
+    assert got.schema.simpleString() == (
+        "struct<lead:bigint,num:double,flag:boolean,day:timestamp,"
+        "mixed:string,empty:string,at:timestamp>"
+    )
+    assert got.collect() == want.collect()
+    # one driver-local relation: no pickled Python slices to read back
+    assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+
+
+def test_rows_to_df_reads_naive_datetimes_in_session_zone(spark):
+    """Deliberate behaviour change, pinned: a naive ``datetime`` is
+    read in the SESSION time zone (UTC, ``session.py``) by the Arrow
+    path, where ``spark.createDataFrame`` over a row list reads it in
+    the Python process's local zone.  The two agree under ``TZ=UTC``
+    and differ by the zone's offset elsewhere; JSON sources deliver no
+    ``datetime`` values, so syncs are unaffected."""
+    import os
+    import time
+
+    row = {"at": dt.datetime(2024, 1, 2)}
+    shown = F.date_format("at", "yyyy-MM-dd HH:mm").alias("s")
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        got = rows_to_df(spark, [row]).select(shown).first()["s"]
+        old = spark.createDataFrame([row], "at timestamp").select(shown)
+        old = old.first()["s"]
+    finally:
+        if prev is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+    assert got == "2024-01-02 00:00"  # session zone (UTC)
+    assert old == "2024-01-02 05:00"  # process zone (UTC-5)
+
+
+def test_read_takes_schema_from_spark_footer(spark, wh):
+    """A Spark-written table reads with exactly Spark's inferred schema
+    (nullability included), taken from the footer with no Spark job."""
+    df = spark.sql(
+        """SELECT id AS l, CAST(id AS double) AS d, CAST(id AS string) AS s,
+                  id % 2 = 0 AS b,
+                  TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS ts,
+                  CAST(id AS decimal(20,4)) AS dec, array(id, id + 1) AS arr,
+                  named_struct('x', id, 'y', CAST(id AS string)) AS st,
+                  map('k', id) AS m
+           FROM range(6)"""
+    )
+    wh.write_atomic(df, "bitcoin", "typed")
+    path = str(wh.table_path("bitcoin", "typed"))
+    got, n_jobs = _spark_jobs(spark, lambda: wh.read("bitcoin", "typed"))
+    assert n_jobs == 0
+    assert got.schema == spark.read.parquet(path).schema
+    assert wh.read_with(spark, "bitcoin", "typed").schema == got.schema
+    assert sorted(got.collect()) == sorted(spark.read.parquet(path).collect())
+
+
+def test_read_falls_back_to_inference(spark, wh, tmp_path):
+    """Files without Spark's footer key, partitioned roots and
+    ``mergeSchema`` take Spark's own inference path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bitcoin_datawarehouse_spark.pipeline.catalog import _footer_schema
+
+    foreign = wh.table_path("bitcoin", "foreign")
+    foreign.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": [1, 2], "v": ["a", None]}), foreign / "part-0.parquet"
+    )
+    assert _footer_schema(spark, foreign) is None
+    got = wh.read("bitcoin", "foreign")
+    assert got.schema == spark.read.parquet(str(foreign)).schema
+    assert sorted(got.collect()) == [(1, "a"), (2, None)]
+
+    wh.write_atomic(
+        rows_df(spark, [{"id": 1, "day": "d1"}, {"id": 2, "day": "d2"}]),
+        "bitcoin", "parted", partition_by=["day"],
+    )
+    parted = wh.table_path("bitcoin", "parted")
+    assert _footer_schema(spark, parted) is None
+    assert sorted(wh.read("bitcoin", "parted").collect()) == [(1, "d1"), (2, "d2")]
+
+    wh.write_atomic(rows_df(spark, [{"id": 1}]), "bitcoin", "flat")
+    flat = wh.table_path("bitcoin", "flat")
+    assert _footer_schema(spark, flat) is not None
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert _footer_schema(spark, flat) is None
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_record_count_from_footers_matches_count(spark, wh):
+    """The footer row count equals COUNT(*) on a multi-file table and a
+    zero-row write, is 0 for a missing table, and runs no Spark job."""
+    ld = Loader(wh, "bitcoin", "multi")
+    assert ld.get_record_count() == 0
+    df = spark.range(1000).withColumnRenamed("id", "k").repartition(3)
+    ld.load_full_refresh(df)
+    assert len(list(wh.table_path("bitcoin", "multi").glob("*.parquet"))) > 1
+    n, n_jobs = _spark_jobs(spark, ld.get_record_count)
+    assert (n, n_jobs) == (wh.read("bitcoin", "multi").count(), 0) == (1000, 0)
+
+    empty = Loader(wh, "bitcoin", "empty")
+    empty.load_full_refresh(df.limit(0))
+    assert empty.get_record_count() == wh.read("bitcoin", "empty").count() == 0
+
+
+def test_incremental_sync_spark_job_budget(spark, tmp_path):
+    """One incremental sync of the demo's five jobs stays within its
+    Spark-job budget.  The bookkeeping around the five merge writes —
+    the control-table updates, the merge's target read, the row-count
+    probe, the batch build — launches no schema-inference, COUNT or
+    Python-slice jobs."""
+    from examples.bitcoin_warehouse_demo import (
+        REFERENCE_JOBS,
+        TRANSFORM_SPEC,
+        record_responses,
+        synth_rows,
+    )
+
+    from bitcoin_datawarehouse_spark.pipeline import FileReplaySource
+
+    responses = tmp_path / "responses"
+    record_responses(responses, synth_rows(8))
+    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    pipe = Pipeline(
+        spark,
+        wh,
+        FileReplaySource(str(responses), param_column="date"),
+        specs=parse_spec(TRANSFORM_SPEC),
+    )
+    pipe.control.seed([
+        {"job_name": name, "query_id": qid, "target_table": table,
+         "p_key": key, "status": 0, "active": 1,
+         "incremental_column": "date"}
+        for name, qid, table, key in REFERENCE_JOBS
+    ])
+    assert all(r.ok for r in pipe.run())
+    record_responses(responses, synth_rows(12))
+    results, n_jobs = _spark_jobs(
+        spark, lambda: pipe.run(incremental_value="2025-01-02")
+    )
+    assert all(r.ok for r in results)
+    assert {r.job_name: r.rows_loaded for r in results} == {
+        "bitcoin_inputs": 60, "bitcoin_output": 60, "prices_usd": 3,
+        "bitcoin_transactions": 60, "bitcoin_block": 12,
+    }
+    # 1 registry scan + 8 per job (control start/end writes and the
+    # merge's own jobs); 72 before the footer reads and Arrow batches
+    assert n_jobs <= 41
+
+
 def test_jsonl_shard_export_roundtrip(spark, wh, tmp_path):
     """Training-shard export: n gzipped JSONL files, round-trips
     losslessly, shard count as requested."""
